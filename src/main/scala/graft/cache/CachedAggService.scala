@@ -1,10 +1,10 @@
 package graft.cache
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.IncrementalAgg
+import graft.sync.SyncOps
 
 /** Cached TIME-BUCKET AGGREGATES: the dashboard-latency core of the
   * reference's caching layer married to mergeable aggregate state.
@@ -18,7 +18,8 @@ import graft.ops.IncrementalAgg
   *
   * At 100 TB: the cached state is buckets × 4 values (tiny — it
   * broadcasts), the refresh scan is a pushed time-range predicate, and
-  * the merge shuffles state rows, never history.
+  * the merge shuffles state rows, never history. The tail's row count
+  * and new watermark (its own max time) come from one action.
   *
   * Watermark contract (same as CachedQueryService): refresh reads rows
   * STRICTLY past the stored watermark. The bit-identical guarantee
@@ -33,50 +34,16 @@ class CachedAggService(spark: SparkSession, dir: String,
   private def aggKey(timeCol: String, interval: String, valueCol: String) =
     Some(s"agg_${timeCol}_${interval.replace(' ', '_')}_$valueCol")
 
-  private def maxTsString(df: DataFrame, tc: String): Option[String] =
-    Option(df.agg(max(col(tc)).cast("string")).head().getString(0))
-
   /** The bucketed aggregate of `table`, served from cached state —
     * initial full aggregation on first call, merge-only refresh after.
     * Output shape matches `TimeBucketAgg.bucketed` (bucket_ts,
     * point_count, value_avg, value_min, value_max).
     */
   def aggregateWithCaching(table: String, timeCol: String, interval: String,
-                           valueCol: String): CachedQueryResult = {
-    val key = aggKey(timeCol, interval, valueCol)
-    val meta = if (cache.hasCache(table, key)) cache.getMetadata(table, key) else None
-    val base = Tables.loadNormalized(spark, dir, table)
-    meta.flatMap(_.lastTimestamp) match {
-      case Some(wm) =>
-        val fresh = base.filter(
-          col(timeCol) > lit(wm).cast(base.schema(timeCol).dataType))
-        val freshCount = fresh.count()
-        val state = cache.getCachedData(table, key)
-          .getOrElse(sys.error(s"agg cache metadata present but state missing for '$table'"))
-        if (freshCount == 0)
-          CachedQueryResult(IncrementalAgg.readState(state),
-            isIncremental = true, meta.get.rowCount, 0)
-        else {
-          val merged = IncrementalAgg.mergeStates(state,
-            IncrementalAgg.bucketState(fresh, timeCol, interval, valueCol))
-          val newWm = maxTsString(fresh, timeCol).orElse(meta.flatMap(_.lastTimestamp))
-          val n = meta.get.rowCount + freshCount
-          cache.setCachedData(table, merged,
-            CachedQueryMetadata(newWm, n, nowMillis()), key)
-          val back = cache.getCachedData(table, key).getOrElse(merged)
-          CachedQueryResult(IncrementalAgg.readState(back),
-            isIncremental = true, n, freshCount)
-        }
-      case None =>
-        val state = IncrementalAgg.bucketState(base, timeCol, interval, valueCol)
-        val n = base.count()
-        val wm = maxTsString(base, timeCol)
-        cache.setCachedData(table, state, CachedQueryMetadata(wm, n, nowMillis()), key)
-        val back = cache.getCachedData(table, key).getOrElse(state)
-        CachedQueryResult(IncrementalAgg.readState(back),
-          isIncremental = false, n, n)
-    }
-  }
+                           valueCol: String): CachedQueryResult =
+    refresh(table, timeCol, aggKey(timeCol, interval, valueCol))(
+      IncrementalAgg.bucketState(_, timeCol, interval, valueCol),
+      IncrementalAgg.mergeStates, IncrementalAgg.readState)
 
   def clearCache(table: String, timeCol: String, interval: String,
                  valueCol: String): Unit =
@@ -94,37 +61,38 @@ class CachedAggService(spark: SparkSession, dir: String,
     */
   def quantilesWithCaching(table: String, timeCol: String, interval: String,
                            valueCol: String, lo: Double, hi: Double,
-                           nBins: Int, qs: Seq[Double]): CachedQueryResult = {
-    val key = histKey(timeCol, interval, valueCol, lo, hi, nBins)
+                           nBins: Int, qs: Seq[Double]): CachedQueryResult =
+    refresh(table, timeCol, histKey(timeCol, interval, valueCol, lo, hi, nBins))(
+      IncrementalAgg.histState(_, timeCol, interval, valueCol, lo, hi, nBins),
+      IncrementalAgg.mergeHistStates, IncrementalAgg.quantilesFromState(_, lo, hi, qs))
+
+  /** The refresh behind both methods: take the tail past the cached
+    * watermark (the whole table on the first call, or when the cached
+    * state has no watermark), then serve the cached state as-is when
+    * the tail is empty, or cache `merge(cached, build(tail))` — just
+    * `build(tail)` on the first call — under the tail's watermark.
+    * `read` turns a state into the answer.
+    */
+  private def refresh(table: String, timeCol: String, key: Option[String])(
+      build: DataFrame => DataFrame, merge: (DataFrame, DataFrame) => DataFrame,
+      read: DataFrame => DataFrame): CachedQueryResult = {
     val meta = if (cache.hasCache(table, key)) cache.getMetadata(table, key) else None
+    val wm = meta.flatMap(_.lastTimestamp)
+    val prior = if (wm.isDefined) meta.get.rowCount else 0L
     val base = Tables.loadNormalized(spark, dir, table)
-    def read(state: DataFrame) = IncrementalAgg.quantilesFromState(state, lo, hi, qs)
-    meta.flatMap(_.lastTimestamp) match {
-      case Some(wm) =>
-        val fresh = base.filter(
-          col(timeCol) > lit(wm).cast(base.schema(timeCol).dataType))
-        val freshCount = fresh.count()
-        val state = cache.getCachedData(table, key)
-          .getOrElse(sys.error(s"hist cache metadata present but state missing for '$table'"))
-        if (freshCount == 0)
-          CachedQueryResult(read(state), isIncremental = true, meta.get.rowCount, 0)
-        else {
-          val merged = IncrementalAgg.mergeHistStates(state,
-            IncrementalAgg.histState(fresh, timeCol, interval, valueCol, lo, hi, nBins))
-          val newWm = maxTsString(fresh, timeCol).orElse(meta.flatMap(_.lastTimestamp))
-          val n = meta.get.rowCount + freshCount
-          cache.setCachedData(table, merged,
-            CachedQueryMetadata(newWm, n, nowMillis()), key)
-          val back = cache.getCachedData(table, key).getOrElse(merged)
-          CachedQueryResult(read(back), isIncremental = true, n, freshCount)
-        }
-      case None =>
-        val state = IncrementalAgg.histState(base, timeCol, interval, valueCol, lo, hi, nBins)
-        val n = base.count()
-        val wm = maxTsString(base, timeCol)
-        cache.setCachedData(table, state, CachedQueryMetadata(wm, n, nowMillis()), key)
-        val back = cache.getCachedData(table, key).getOrElse(state)
-        CachedQueryResult(read(back), isIncremental = false, n, n)
+    val fresh = wm.fold(base)(w => base.filter(SyncOps.pastWatermark(base, timeCol, w)))
+    val tail = SyncOps.tailOf(fresh, Some(timeCol))
+    val cached = wm.map(_ => cache.getCachedData(table, key).getOrElse(
+      sys.error(s"cache metadata present but state missing for '$table' ${key.mkString}")))
+    if (cached.isDefined && tail.rows == 0)
+      CachedQueryResult(read(cached.get), isIncremental = true, prior, 0)
+    else {
+      val state = cached.fold(build(fresh))(merge(_, build(fresh)))
+      val n = prior + tail.rows
+      cache.setCachedData(table, state,
+        CachedQueryMetadata(tail.maxTime, n, nowMillis()), key)
+      val back = cache.getCachedData(table, key).getOrElse(state)
+      CachedQueryResult(read(back), isIncremental = cached.isDefined, n, tail.rows)
     }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.TypeInference
+import graft.sync.SyncOps
 
 /** Result of a cached query (enhanced_query_service.py:29-52). */
 case class CachedQueryResult(
@@ -26,6 +27,9 @@ case class CachedQueryResult(
   *     cached data, and re-cached with the advanced watermark;
   *  3. nothing new                 → the cached result returns as-is,
   *     zero source work beyond the tail probe.
+  *
+  * Each load takes its row count and watermark (the loaded slice's
+  * own max time) from one action over that slice.
   *
   * Conversions: `selectedConversions = None` → automatic inference
   * (reference convert_automatic), resolved to a concrete per-column
@@ -86,21 +90,17 @@ class CachedQueryService(spark: SparkSession, dir: String,
                                  sel: Option[Map[String, String]]): Map[String, String] =
     sel.getOrElse(TypeInference.suggestConversions(df))
 
-  private def maxTsString(df: DataFrame, tc: String): Option[String] =
-    Option(df.agg(max(col(tc)).cast("string")).head().getString(0))
-
   private def initialLoad(table: String, limit: Int, timeCol: Option[String],
                           sel: Option[Map[String, String]]): CachedQueryResult = {
     val base = Tables.loadNormalized(spark, dir, table)
-    // watermark-tie safety: take the earliest `limit` rows, then widen
-    // to EVERY row at or before the boundary timestamp — otherwise
-    // rows tying the boundary beyond the limit would sit below the
-    // stored watermark and no later incremental pull could ever fetch
-    // them (silent permanent loss).
+    // watermark-tie safety: the slice is every row NOT past the time of
+    // the `limit`-th earliest row — a bare limit would leave rows tying
+    // that boundary below the stored watermark, where no later
+    // incremental pull could ever fetch them (silent permanent loss)
     val slice = timeCol match {
       case Some(tc) =>
-        maxTsString(base.orderBy(col(tc)).limit(limit), tc) match {
-          case Some(b) => base.filter(col(tc) <= lit(b).cast(base.schema(tc).dataType))
+        SyncOps.tailOf(base.orderBy(col(tc)).limit(limit), timeCol).maxTime match {
+          case Some(b) => base.filter(!SyncOps.pastWatermark(base, tc, b))
           case None => base.limit(limit) // empty table
         }
       case None => base.limit(limit)
@@ -109,28 +109,26 @@ class CachedQueryService(spark: SparkSession, dir: String,
     // force: the resolved map is the authoritative schema decision —
     // both the initial slice and every future tail apply it verbatim
     val converted = TypeInference.applyConversions(slice, conversions, force = true)
-    val n = converted.count()
-    val wm = timeCol.flatMap(tc => maxTsString(converted, tc))
+    val tail = SyncOps.tailOf(converted, timeCol)
     cache.setCachedData(table, converted,
-      CachedQueryMetadata(wm, n, nowMillis(), conversions))
+      CachedQueryMetadata(tail.maxTime, tail.rows, nowMillis(), conversions))
     val cached = cache.getCachedData(table).getOrElse(converted)
-    CachedQueryResult(ordered(cached, timeCol), isIncremental = false, n, n)
+    CachedQueryResult(ordered(cached, timeCol), isIncremental = false, tail.rows, tail.rows)
   }
 
   private def incrementalLoad(table: String, tc: String, meta: CachedQueryMetadata,
                               sel: Option[Map[String, String]]): CachedQueryResult = {
     val base = Tables.loadNormalized(spark, dir, table)
-    val wm = meta.lastTimestamp.get
     // pushed predicate: only the tail past the watermark leaves the scan
-    val fresh = base.filter(col(tc) > lit(wm).cast(base.schema(tc).dataType))
+    val fresh = base.filter(SyncOps.pastWatermark(base, tc, meta.lastTimestamp.get))
     // reapply EXACTLY the conversions recorded at initial load (or the
     // caller's override) — never re-infer on the tail slice
     val conversions = sel.getOrElse(meta.selectedConversions)
     val freshConv = TypeInference.applyConversions(fresh, conversions, force = true)
-    val freshCount = freshConv.count()
+    val tail = SyncOps.tailOf(freshConv, Some(tc))
     val cached = cache.getCachedData(table)
       .getOrElse(sys.error(s"cache metadata present but data missing for '$table'"))
-    if (freshCount == 0)
+    if (tail.rows == 0)
       CachedQueryResult(ordered(cached, Some(tc)), isIncremental = true, meta.rowCount, 0)
     else {
       // O(tail) commit: only the fresh slice is written — the provider
@@ -139,12 +137,11 @@ class CachedQueryService(spark: SparkSession, dir: String,
       // select() pins the slice to the cached column order (and errors
       // on a missing column) so every slice shares one schema.
       val aligned = freshConv.select(cached.columns.map(col).toIndexedSeq: _*)
-      val newWm = maxTsString(freshConv, tc).orElse(meta.lastTimestamp)
-      val n = meta.rowCount + freshCount
+      val n = meta.rowCount + tail.rows
       cache.appendCachedData(table, aligned,
-        CachedQueryMetadata(newWm, n, nowMillis(), conversions))
+        CachedQueryMetadata(tail.maxTime.orElse(meta.lastTimestamp), n, nowMillis(), conversions))
       val back = cache.getCachedData(table).getOrElse(cached.unionByName(freshConv))
-      CachedQueryResult(ordered(back, Some(tc)), isIncremental = true, n, freshCount)
+      CachedQueryResult(ordered(back, Some(tc)), isIncremental = true, n, tail.rows)
     }
   }
 

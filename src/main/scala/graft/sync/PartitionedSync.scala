@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Partition-pruned sync target — the 100 TB form of the sync
   * engine's merge (reference sync_engine.py:180 fetch-then-upsert).
   *
-  * `SyncRunner.writeTarget` rewrites the whole target per incremental
+  * `SyncRunner.syncTable` rewrites the whole target per incremental
   * merge: correct, atomic (temp + rename), and the right call for
   * targets that fit a rewrite budget. At 100 TB it is the sync's
   * dominant cost — so this target partitions the table by a caller-
@@ -42,12 +42,10 @@ object PartitionedSync {
   /** Partition column added to the stored layout (dropped on read). */
   val PartCol = "__part"
 
-  /** `maxTime` is the watermark candidate: max(timeCol) over the
-    * EXACT fresh rows that were merged (computed while the tail is
-    * persisted). Deriving it afterwards by re-aggregating the fresh
-    * PLAN would re-read the live source — a row committed mid-sync
-    * would raise the watermark without having been merged and be
-    * skipped by every later incremental pull, silently forever.
+  /** `freshRows` and `maxTime` are the [[SyncOps.Tail]] of the merged
+    * rows: their count and watermark candidate, from the same persisted
+    * tail the merge reads (see [[SyncOps.withTail]] for why neither may
+    * come from a second read of the fresh plan).
     */
   case class MergeStats(
       freshRows: Long,
@@ -103,76 +101,70 @@ object PartitionedSync {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new Path(path)), s"no partitioned target at $path — writeFull first")
 
-    val freshP = fresh.withColumn(PartCol, bucketOrFail(bucket))
-    freshP.persist()
-    try {
-      // one action materializes the persisted tail AND yields both the
-      // row count and the watermark candidate (see MergeStats doc)
-      val head = freshP
-        .agg(count(lit(1)), max(col(timeCol)).cast("string")).head()
-      val freshRows = head.getLong(0)
-      if (freshRows == 0)
-        return MergeStats(0L, Nil, partitionValues(fs, path).size.toLong, Nil, None)
-      val maxTime = Option(head.getString(1))
+    val tagged = fresh.withColumn(PartCol, bucketOrFail(bucket))
+    SyncOps.withTail(tagged, Some(timeCol)) { (freshP, tail) =>
+      if (tail.rows == 0)
+        MergeStats(0L, Nil, partitionValues(fs, path).size.toLong, Nil, None)
+      else {
+        // explicit schema: partition discovery would otherwise INFER the
+        // partition column's type from its values (a 'yyyy' bucket reads
+        // back as LONG) and the string plumbing below would miscompare —
+        // the user-supplied schema pins __part to string and still
+        // partition-prunes
+        val target = spark.read.schema(freshP.schema).parquet(path)
+        // partitions receiving fresh rows ∪ partitions holding stale
+        // versions of fresh keys (key+partition columns only — column
+        // pruning keeps the payload out of this scan; AQE broadcasts the
+        // fresh key set when small)
+        val partsNew = freshP.select(PartCol).distinct()
+        val partsStale = target
+          .join(freshP.select(keys.map(col): _*).distinct(), keys, "left_semi")
+          .select(PartCol).distinct()
+        val affected = partsNew.unionByName(partsStale).distinct()
+          .collect().map(_.getString(0)).sorted.toIndexedSeq
+        val before = partitionValues(fs, path)
 
-      // explicit schema: partition discovery would otherwise INFER the
-      // partition column's type from its values (a 'yyyy' bucket reads
-      // back as LONG) and the string plumbing below would miscompare —
-      // the user-supplied schema pins __part to string and still
-      // partition-prunes
-      val target = spark.read.schema(freshP.schema).parquet(path)
-      // partitions receiving fresh rows ∪ partitions holding stale
-      // versions of fresh keys (key+partition columns only — column
-      // pruning keeps the payload out of this scan; AQE broadcasts the
-      // fresh key set when small)
-      val partsNew = freshP.select(PartCol).distinct()
-      val partsStale = target
-        .join(freshP.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        .select(PartCol).distinct()
-      val affected = partsNew.unionByName(partsStale).distinct()
-        .collect().map(_.getString(0)).sorted.toIndexedSeq
-      val before = partitionValues(fs, path)
+        // the merge plan reads the slice it overwrites — materialize it
+        // to break the read-write cycle. localCheckpoint (eager) holds
+        // the merged slice in block storage: the previous tmp-PARQUET
+        // staging paid a full extra write + read-back + listing + delete
+        // of the whole affected slice per merge (measured ~25% of
+        // q_merge_partitioned's wall); the checkpoint is the same
+        // barrier at block-manager cost. Crash semantics are unchanged —
+        // the tmp table was never a recovery point (the watermark replay
+        // absorbs a crash either way). The repartition-on-PartCol (the
+        // writeFull rationale) keeps the final dynamic overwrite
+        // shuffle-free and one-file-per-bucket.
+        val slice = target.filter(col(PartCol).isin(affected: _*))
+        val merged = SyncOps.upsertKeepLatest(
+          slice.unionByName(freshP), keys, timeCol, tieBreak)
+          .repartition(spark.sparkContext.defaultParallelism, col(PartCol))
+          .localCheckpoint()
+        val emptied = try {
+          merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(PartCol).parquet(path)
 
-      // the merge plan reads the slice it overwrites — materialize it
-      // to break the read-write cycle. localCheckpoint (eager) holds
-      // the merged slice in block storage: the previous tmp-PARQUET
-      // staging paid a full extra write + read-back + listing + delete
-      // of the whole affected slice per merge (measured ~25% of
-      // q_merge_partitioned's wall); the checkpoint is the same
-      // barrier at block-manager cost. Crash semantics are unchanged —
-      // the tmp table was never a recovery point (the watermark replay
-      // absorbs a crash either way). The repartition-on-PartCol (the
-      // writeFull rationale) keeps the final dynamic overwrite
-      // shuffle-free and one-file-per-bucket.
-      val slice = target.filter(col(PartCol).isin(affected: _*))
-      val merged = SyncOps.upsertKeepLatest(
-        slice.unionByName(freshP), keys, timeCol, tieBreak)
-        .repartition(spark.sparkContext.defaultParallelism, col(PartCol))
-        .localCheckpoint()
-      val emptied = try {
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(PartCol).parquet(path)
+          // a partition every row of which was superseded produces no
+          // output rows, so dynamic overwrite leaves its stale files in
+          // place — detect via the MERGED output's partition values and
+          // delete the leftovers (a crash in between is absorbed by the
+          // idempotent replay, same as the partial-overwrite case). The
+          // merged slice is checkpointed, so the distinct is a bounded
+          // scan of in-memory blocks, not a recompute
+          val outParts = merged.select(PartCol).distinct()
+            .collect().map(_.getString(0)).toSet
+          val gone = affected.filterNot(outParts.contains)
+            .filter(before.contains)
+          gone.foreach(p => fs.delete(new Path(path, s"$PartCol=$p"), true))
+          gone
+        } finally {
+          merged.unpersist(blocking = false); ()
+        }
 
-        // a partition every row of which was superseded produces no
-        // output rows, so dynamic overwrite leaves its stale files in
-        // place — detect via the MERGED output's partition values and
-        // delete the leftovers (a crash in between is absorbed by the
-        // idempotent replay, same as the partial-overwrite case). The
-        // merged slice is checkpointed, so the distinct is a bounded
-        // scan of in-memory blocks, not a recompute
-        val outParts = merged.select(PartCol).distinct()
-          .collect().map(_.getString(0)).toSet
-        val gone = affected.filterNot(outParts.contains)
-          .filter(before.contains)
-        gone.foreach(p => fs.delete(new Path(path, s"$PartCol=$p"), true))
-        gone
-      } finally {
-        merged.unpersist(blocking = false); ()
+        MergeStats(tail.rows, affected, before.size.toLong, emptied, tail.maxTime)
       }
-
-      MergeStats(freshRows, affected, before.size.toLong, emptied, maxTime)
-    } finally freshP.unpersist(blocking = true)
+    }
   }
 
   private def partitionValues(fs: org.apache.hadoop.fs.FileSystem,

@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   *                      (concat + sort by time column)
   *
   * Scale notes (100 TB):
-  *  - `incremental` is a parquet-pushed predicate — row groups outside
-  *    the watermark are skipped via min/max stats, so an incremental
-  *    pull reads only the new tail, exactly like the reference's
-  *    indexed Oracle range scan.
+  *  - `pastWatermark` is a parquet-pushed predicate — row groups
+  *    outside the watermark are skipped via min/max stats, so an
+  *    incremental pull reads only the new tail, exactly like the
+  *    reference's indexed Oracle range scan.
   *  - `upsertKeepLatest`/`dedupKeepLast` shuffle once on the key
   *    columns (window row_number). AQE splits skewed key partitions;
   *    no driver-side state.
@@ -36,17 +36,49 @@ object SyncOps {
   def fullSnapshot(table: DataFrame, orderCols: Seq[String]): DataFrame =
     table.orderBy(orderCols.map(col): _*)
 
-  /** Rows strictly past the watermark, time-ordered (incremental pull).
-    * The filter is pushed into the parquet scan. The watermark literal
-    * casts to the COLUMN's own type — a numeric or string time column
-    * works the same as a timestamp one (a hard timestamp cast would
-    * throw under ANSI mode, or silently match nothing without it).
-    */
+  /** Rows strictly past the watermark, time-ordered (incremental pull). */
   def incremental(table: DataFrame, timeCol: String, watermark: String,
                   tieBreak: Seq[String] = Nil): DataFrame =
-    table
-      .filter(col(timeCol) > lit(watermark).cast(table.schema(timeCol).dataType))
+    table.filter(pastWatermark(table, timeCol, watermark))
       .orderBy((timeCol +: tieBreak).map(col): _*)
+
+  /** The watermark test every incremental path shares (both sync
+    * layouts, both cache services): a row is past `watermark` when its
+    * time is STRICTLY greater. The literal casts to the column's own
+    * type, so a numeric or string time column works the same as a
+    * timestamp one (a hard timestamp cast would throw under ANSI mode,
+    * or silently match nothing without it). Scans take it as a pushed
+    * predicate, so only the tail is read.
+    */
+  def pastWatermark(table: DataFrame, timeCol: String, watermark: String): Column =
+    col(timeCol) > lit(watermark).cast(table.schema(timeCol).dataType)
+
+  /** What a pass lands: its row count and the watermark it advances
+    * to — max(timeCol) over exactly those rows, as the string
+    * [[pastWatermark]] reads back (None without rows or a time column).
+    */
+  case class Tail(rows: Long, maxTime: Option[String])
+
+  /** [[Tail]] of `rows`, count and max from one action. */
+  def tailOf(rows: DataFrame, timeCol: Option[String]): Tail = {
+    val aggs = count(lit(1)) +: timeCol.map(tc => max(col(tc)).cast("string")).toSeq
+    val r = rows.agg(aggs.head, aggs.tail: _*).head()
+    Tail(r.getLong(0), timeCol.flatMap(_ => Option(r.getString(1))))
+  }
+
+  /** Evaluate `rows` ONCE and hand them, persisted, to `land` with
+    * their [[Tail]]: the count, the watermark and whatever `land`
+    * writes all come from the same rows. A live source is read once,
+    * so a row committed mid-pass can neither be counted without
+    * landing nor raise the watermark past what landed. The rows are
+    * held in executor block storage (memory, spilling to disk) only
+    * while `land` runs.
+    */
+  def withTail[A](rows: DataFrame, timeCol: Option[String])(land: (DataFrame, Tail) => A): A = {
+    val held = rows.persist()
+    try land(held, tailOf(held, timeCol))
+    finally held.unpersist(blocking = true)
+  }
 
   /** Keep the latest row per primary key — the batch equivalent of the
     * reference's INSERT OR REPLACE upsert. Latest = max (timeCol,

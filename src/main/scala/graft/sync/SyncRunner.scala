@@ -2,7 +2,6 @@ package graft.sync
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Engine-side sync orchestration: one cycle per configured table.
   *
@@ -12,9 +11,15 @@ import org.apache.spark.sql.functions._
   * here the pieces already built compose into the full loop:
   *
   *   TableConfig (what to sync) → full or incremental decision from
-  *   the StateStore watermark → SyncOps pull/upsert → parquet target
-  *   (temp + swap, since the incremental plan READS the current
-  *   target) → watermark advance → SyncLogRepo audit record.
+  *   the StateStore watermark → the source tail past it, evaluated
+  *   once ([[SyncOps.withTail]]) → landed in the target layout →
+  *   watermark advanced to the landed rows' max → SyncLogRepo audit
+  *   record.
+  *
+  * Two target layouts share that cycle: [[syncTable]] rewrites the
+  * whole parquet target (temp + swap, since the merge plan READS the
+  * current target); [[syncTablePartitioned]] rewrites only the
+  * partitions a pass touches ([[PartitionedSync]]).
   *
   * `source` abstracts where rows come from (a parquet catalog in
   * tests, `JdbcSync.read` against a database in production) — the
@@ -37,9 +42,6 @@ class SyncRunner(spark: SparkSession,
   private def fs = new Path(targetDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def targetExists(cfg: TableConfig): Boolean =
-    fs.exists(new Path(targetPath(cfg)))
-
   /** Read the current synced target (after at least one sync). */
   def target(cfg: TableConfig): DataFrame = spark.read.parquet(targetPath(cfg))
 
@@ -52,41 +54,28 @@ class SyncRunner(spark: SparkSession,
     fs.rename(tmp, p)
   }
 
+  /** The stored watermark an incremental pass resumes from: None (a
+    * full sync) without a time column, a watermark or a target.
+    */
+  private def resumeFrom(cfg: TableConfig): Option[String] =
+    if (!cfg.hasTimeColumn) None
+    else state.loadWatermark(cfg.targetTable)
+      .filter(_ => fs.exists(new Path(targetPath(cfg))))
+
   /** One sync cycle for one table. Full on first run (or without a
     * time column); incremental past the stored watermark otherwise.
     * Every run leaves an audit record; failures are logged and
     * re-thrown.
     */
   def syncTable(cfg: TableConfig): SyncLogEntry = {
-    val incremental = cfg.hasTimeColumn &&
-      state.loadWatermark(cfg.targetTable).isDefined && targetExists(cfg)
-    val entry = log.logStart(cfg.targetTable,
-      if (incremental) "incremental" else "full")
-    try {
-      val src = source(cfg)
-      val rows =
-        if (incremental) {
-          val tc = cfg.timeColumn.get
-          val wm = state.loadWatermark(cfg.targetTable).get
-          val fresh = SyncOps.incremental(src, tc, wm)
-          val nFresh = fresh.count()
-          if (nFresh > 0) {
-            val merged = SyncOps.applyIncremental(
-              target(cfg), fresh, Seq(cfg.primaryKey), tc, cfg.primaryKey)
-            writeTarget(cfg, merged)
-            advanceWatermark(cfg)
-          }
-          nFresh
-        } else {
-          writeTarget(cfg, src)
-          if (cfg.hasTimeColumn) advanceWatermark(cfg)
-          target(cfg).count()
-        }
-      log.logComplete(entry, rows)
-    } catch {
-      case e: Throwable =>
-        log.logFailure(entry, Option(e.getMessage).getOrElse(e.getClass.getName))
-        throw e
+    val wm = resumeFrom(cfg)
+    cycle(cfg, wm) { fresh =>
+      SyncOps.withTail(fresh, cfg.timeColumn) { (rows, tail) =>
+        if (wm.isEmpty) writeTarget(cfg, rows)
+        else if (tail.rows > 0) writeTarget(cfg, SyncOps.applyIncremental(
+          target(cfg), rows, Seq(cfg.primaryKey), cfg.timeColumn.get, cfg.primaryKey))
+        tail
+      }
     }
   }
 
@@ -103,38 +92,16 @@ class SyncRunner(spark: SparkSession,
   def syncTablePartitioned(cfg: TableConfig, bucket: Column): SyncLogEntry = {
     require(cfg.hasTimeColumn,
       s"partitioned sync needs a time column on ${cfg.targetTable}")
-    val tc = cfg.timeColumn.get
-    val incremental = state.loadWatermark(cfg.targetTable).isDefined && targetExists(cfg)
-    val entry = log.logStart(cfg.targetTable,
-      if (incremental) "incremental" else "full")
-    try {
-      val src = source(cfg)
-      val rows =
-        if (incremental) {
-          val wm = state.loadWatermark(cfg.targetTable).get
-          // filter only — no order; the merge's keep-latest window
-          // neither needs nor keeps a pre-sort
-          val fresh = src.filter(
-            col(tc) > lit(wm).cast(src.schema(tc).dataType))
-          val stats = PartitionedSync.mergeIncremental(spark,
-            targetPath(cfg), fresh, Seq(cfg.primaryKey), tc,
-            cfg.primaryKey, bucket)
-          // watermark from the stats' max over the MERGED rows — not a
-          // full-target scan (defeats the O(affected) point) and not a
-          // re-aggregation of the fresh plan (would re-read the live
-          // source and could advance past rows the merge never saw)
-          stats.maxTime.foreach(state.saveWatermark(cfg.targetTable, _))
-          stats.freshRows
-        } else {
-          PartitionedSync.writeFull(src, bucket, targetPath(cfg))
-          advanceWatermark(cfg)
-          target(cfg).count()
-        }
-      log.logComplete(entry, rows)
-    } catch {
-      case e: Throwable =>
-        log.logFailure(entry, Option(e.getMessage).getOrElse(e.getClass.getName))
-        throw e
+    val wm = resumeFrom(cfg)
+    cycle(cfg, wm) { fresh =>
+      if (wm.isEmpty) SyncOps.withTail(fresh, cfg.timeColumn) { (rows, tail) =>
+        PartitionedSync.writeFull(rows, bucket, targetPath(cfg))
+        tail
+      } else {
+        val s = PartitionedSync.mergeIncremental(spark, targetPath(cfg), fresh,
+          Seq(cfg.primaryKey), cfg.timeColumn.get, cfg.primaryKey, bucket)
+        SyncOps.Tail(s.freshRows, s.maxTime)
+      }
     }
   }
 
@@ -157,27 +124,37 @@ class SyncRunner(spark: SparkSession,
     */
   def testSync(cfg: TableConfig, rowLimit: Int = 100000): SyncLogEntry = {
     require(rowLimit > 0, s"rowLimit must be positive, got $rowLimit")
-    val entry = log.logStart(cfg.targetTable, "test")
+    cycle(cfg, None, test = true) { src =>
+      SyncOps.withTail(src.limit(rowLimit), None) { (rows, tail) =>
+        writeTarget(cfg, rows)
+        tail
+      }
+    }
+  }
+
+  /** The cycle body behind [[syncTable]], [[syncTablePartitioned]] and
+    * [[testSync]]: log the start, hand `land` the source rows past
+    * `watermark` (all of them on a full or test sync), advance the
+    * watermark to the [[SyncOps.Tail]] it returns — never on a test
+    * sync, never to nothing (a pass that landed no rows keeps the old
+    * watermark, or stays without one) — and log the outcome.
+    */
+  private def cycle(cfg: TableConfig, watermark: Option[String], test: Boolean = false)
+                   (land: DataFrame => SyncOps.Tail): SyncLogEntry = {
+    val entry = log.logStart(cfg.targetTable,
+      if (test) "test" else if (watermark.isDefined) "incremental" else "full")
     try {
-      writeTarget(cfg, source(cfg).limit(rowLimit))
-      log.logComplete(entry, target(cfg).count())
+      val src = source(cfg)
+      val tail = land(watermark.fold(src)(wm =>
+        src.filter(SyncOps.pastWatermark(src, cfg.timeColumn.get, wm))))
+      if (!test) tail.maxTime.foreach(state.saveWatermark(cfg.targetTable, _))
+      log.logComplete(entry, tail.rows)
     } catch {
       case e: Throwable =>
         log.logFailure(entry, Option(e.getMessage).getOrElse(e.getClass.getName))
         throw e
     }
   }
-
-  /** Watermark = max(timeColumn) over the just-written TARGET (full
-    * syncs and full-rewrite merges; the partitioned path gets its
-    * watermark from `MergeStats.maxTime` instead — see there for why
-    * re-aggregating a source plan is wrong).
-    */
-  private def advanceWatermark(cfg: TableConfig): Unit =
-    cfg.timeColumn.foreach { tc =>
-      Option(target(cfg).agg(max(col(tc)).cast("string")).head().getString(0))
-        .foreach(state.saveWatermark(cfg.targetTable, _))
-    }
 
   /** One table with the syncAll failure contract: a throw becomes a
     * failed audit record instead of aborting the rest of the pass.

@@ -3,7 +3,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sync.{SyncOps, TypeMapper}
+import graft.sync.{StateStore, SyncOps, TypeMapper}
 
 class SyncOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -20,6 +20,32 @@ class SyncOpsSpec extends SparkSpec {
     val got = SyncOps.incremental(mkEvents, "ts", "2024-01-01 10:00:00", Seq("event_id"))
       .select("event_id").as[Long].collect()
     assert(got.toSeq == Seq(2L, 3L))
+  }
+
+  test("watermark tail over timestamp, long and string time columns") {
+    val store = new StateStore(spark, tempDir("graft-wm"))
+    // (time type, three ascending values; the middle one is the watermark)
+    val cases = Seq(
+      ("timestamp", Seq("2024-01-01 10:00:00", "2024-01-01 10:00:05", "2024-01-01 10:00:09")),
+      ("long", Seq("10", "20", "30")),
+      ("string", Seq("a", "b", "c")))
+    for ((tpe, vs) <- cases) {
+      val df = vs.toDF("s").select(col("s").cast(tpe).as("t"), lit(1).as("v"))
+      // a row EQUAL to the watermark is not past it; count and max come
+      // back together from the rows that are
+      val fresh = df.filter(SyncOps.pastWatermark(df, "t", vs(1)))
+      val tail = SyncOps.tailOf(fresh, Some("t"))
+      assert(tail == SyncOps.Tail(1L, Some(vs(2))), tpe)
+      // the max string survives StateStore and, read back, filters the
+      // same data to nothing
+      store.saveWatermark(tpe, tail.maxTime.get)
+      val back = store.loadWatermark(tpe).get
+      assert(back == vs(2), tpe)
+      assert(SyncOps.tailOf(df.filter(SyncOps.pastWatermark(df, "t", back)), Some("t")) ==
+        SyncOps.Tail(0L, None), tpe)
+      // without a time column the tail is a count alone
+      assert(SyncOps.tailOf(df, None) == SyncOps.Tail(3L, None), tpe)
+    }
   }
 
   test("upsertKeepLatest keeps the newest row per key") {

@@ -124,6 +124,69 @@ class SyncRunnerSpec extends SparkSpec {
     assert(state.loadWatermark("t_part").exists(_.startsWith("2024-04-06")))
   }
 
+  test("empty source: a full sync lands 0 rows, stores no watermark; the next full sync lands rows") {
+    val srcDir = tempDir("graft-empty-src")
+    val tgtDir = tempDir("graft-empty-tgt")
+    val state = new StateStore(spark, tempDir("es"))
+    val log = new SyncLogRepo(spark, tempDir("el"))
+    val runner = new SyncRunner(spark,
+      cfg => spark.read.parquet(s"$srcDir/${cfg.sourceTable}.parquet"),
+      tgtDir, state, log)
+    val bucket = date_format(col("updated_at"), "yyyy-MM")
+    val layouts: Seq[(String, TableConfig => SyncLogEntry, TableConfig => DataFrame)] = Seq(
+      ("t_whole", runner.syncTable, runner.target),
+      ("t_part", runner.syncTablePartitioned(_, bucket),
+        cfg => PartitionedSync.read(spark, s"$tgtDir/${cfg.targetTable}.parquet")))
+    for ((name, sync, target) <- layouts) {
+      val cfg = TableConfig("S", "t", name, "id", timeColumn = Some("updated_at"))
+      srcRows(0).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val r0 = sync(cfg)
+      assert(r0.syncType == "full" && r0.status == "completed" && r0.totalRows == 0, name)
+      assert(state.loadWatermark(name).isEmpty, name)
+
+      srcRows(5).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      val r1 = sync(cfg)
+      assert(r1.syncType == "full" && r1.status == "completed" && r1.totalRows == 5, name)
+      assert(target(cfg).count() == 5, name)
+      assert(state.loadWatermark(name) ==
+        Some(target(cfg).agg(max("updated_at").cast("string")).head().getString(0)), name)
+    }
+  }
+
+  test("an incremental pass evaluates its source once, on both layouts") {
+    val srcDir = tempDir("graft-once-src")
+    val tgtDir = tempDir("graft-once-tgt")
+    val state = new StateStore(spark, tempDir("os"))
+    val log = new SyncLogRepo(spark, tempDir("ol"))
+    // every evaluation of a source row passes through the tap once
+    val evals = spark.sparkContext.longAccumulator("source row evaluations")
+    val tap = udf { (s: String) => evals.add(1); s }.asNondeterministic()
+    val runner = new SyncRunner(spark,
+      cfg => spark.read.parquet(s"$srcDir/${cfg.sourceTable}.parquet")
+        .withColumn("payload", tap(col("payload"))),
+      tgtDir, state, log)
+    val bucket = date_format(col("updated_at"), "yyyy-MM")
+    val layouts: Seq[(String, TableConfig => SyncLogEntry, TableConfig => DataFrame)] = Seq(
+      ("o_whole", runner.syncTable, runner.target),
+      ("o_part", runner.syncTablePartitioned(_, bucket),
+        cfg => PartitionedSync.read(spark, s"$tgtDir/${cfg.targetTable}.parquet")))
+    for ((name, sync, target) <- layouts) {
+      val cfg = TableConfig("S", "t", name, "id", timeColumn = Some("updated_at"))
+      srcRows(1000).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      assert(sync(cfg).syncType == "full", name)
+      val wm = state.loadWatermark(name).get
+
+      // 10 new rows and one update land past the watermark
+      srcRows(1010, bump = Map(3L -> 1)).write.mode("overwrite").parquet(s"$srcDir/t.parquet")
+      evals.reset()
+      val r = sync(cfg)
+      assert(r.syncType == "incremental" && r.status == "completed", name)
+      assert(evals.value == 1010L, s"$name: ${evals.value} source row evaluations")
+      val landed = target(cfg).filter(col("updated_at") > lit(wm).cast("timestamp")).count()
+      assert(r.totalRows == 11 && landed == 11, name)
+    }
+  }
+
   test("testSync: row-limited, watermark untouched, next full sync unaffected") {
     val srcDir = tempDir("graft-test-src")
     val tgtDir = tempDir("graft-test-tgt")
